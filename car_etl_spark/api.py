@@ -50,31 +50,31 @@ RRF_K = 60
 SEARCH_RESULT_CAP = 100  # reference src/api/routes/search.py:65-70
 
 
+def _rank_sql(score: str) -> str:
+    """1-based rank by ``score`` desc, ``doc_id`` asc — one parsed
+    window expression (the serve-path rule of ``functions/vectors.py``)."""
+    return f"CAST(row_number() OVER (ORDER BY {score} DESC, doc_id ASC) AS BIGINT)"
+
+
 def _keyword_leg(corpus: DataFrame, terms: tuple[str, ...], fetch: int) -> DataFrame:
     return (
         keyword_scores(corpus, terms, "doc_id")
         .filter(F.col("score") > 0)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(fetch)
-        .withColumn(
-            "rank",
-            F.row_number().over(Window.orderBy(F.desc("score"), F.asc("doc_id"))).cast("long"),
-        )
+        .withColumn("rank", F.expr(_rank_sql("score")))
     )
 
 
 def _vector_leg(embeddings: DataFrame, query_vec: Column, fetch: int) -> DataFrame:
     q = embeddings.sparkSession.range(1).select(query_vec.alias("qvec"))
-    sim = F.round(V.cosine_similarity(F.col("embedding"), F.col("qvec")), 6)
+    sim = F.round(V.cosine_similarity("embedding", "qvec"), 6)
     return (
         embeddings.crossJoin(F.broadcast(q))
         .select(F.col("vec_id").alias("doc_id"), sim.alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(fetch)
-        .withColumn(
-            "rank",
-            F.row_number().over(Window.orderBy(F.desc("score"), F.asc("doc_id"))).cast("long"),
-        )
+        .withColumn("rank", F.expr(_rank_sql("score")))
     )
 
 
@@ -113,10 +113,9 @@ def _rrf_fuse(kw: DataFrame, vec: DataFrame, limit: int) -> DataFrame:
     definition so the plain and tenant-scoped surfaces cannot drift.
     Inputs: (doc_id, kw_rank) and (doc_id, vec_rank), ranks 1-based."""
     fused = kw.join(vec, "doc_id", "full_outer")
-    rrf = F.round(
-        F.coalesce(1.0 / (RRF_K + F.col("kw_rank")), F.lit(0.0))
-        + F.coalesce(1.0 / (RRF_K + F.col("vec_rank")), F.lit(0.0)),
-        8,
+    rrf = F.expr(
+        f"round(coalesce(1.0D / (kw_rank + {RRF_K}), 0.0D)"
+        f" + coalesce(1.0D / (vec_rank + {RRF_K}), 0.0D), 8)"
     )
     return (
         fused.select("doc_id", rrf.alias("rrf_score"), "kw_rank", "vec_rank")
@@ -373,12 +372,7 @@ def tenant_hybrid_search(
     kw = (
         tenant_search(spark, posting_store, terms, tenant, limit=fetch)
         .select("doc_id", F.col("rank_score").alias("kw_score"))
-        .withColumn(
-            "kw_rank",
-            F.row_number()
-            .over(Window.orderBy(F.desc("kw_score"), F.asc("doc_id")))
-            .cast("long"),
-        )
+        .withColumn("kw_rank", F.expr(_rank_sql("kw_score")))
         .select("doc_id", "kw_rank")
     )
     vec_leg = (
@@ -391,12 +385,7 @@ def tenant_hybrid_search(
     vec = (
         vec_leg
         .select(F.col("vec_id").alias("doc_id"), F.col("cosine_sim").alias("vec_score"))
-        .withColumn(
-            "vec_rank",
-            F.row_number()
-            .over(Window.orderBy(F.desc("vec_score"), F.asc("doc_id")))
-            .cast("long"),
-        )
+        .withColumn("vec_rank", F.expr(_rank_sql("vec_score")))
         .select("doc_id", "vec_rank")
     )
     return _rrf_fuse(kw, vec, limit)

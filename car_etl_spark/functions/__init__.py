@@ -1,3 +1,3 @@
 """Pure Column-expression function libraries (no UDFs in the hot path)."""
 
-from car_etl_spark.functions import normalizers, text, vectors  # noqa: F401
+from car_etl_spark.functions import literals, normalizers, text, vectors  # noqa: F401

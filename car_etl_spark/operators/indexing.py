@@ -65,6 +65,7 @@ from pyspark.sql import functions as F
 
 from car_etl_spark.functions import text as T
 from car_etl_spark.functions import vectors as V
+from car_etl_spark.functions.literals import in_list, sql_string
 
 # v2: bucket count derived from corpus stats (meta.json) + term-sorted
 #     partitions so parquet row-group min/max stats prune within a bucket
@@ -1474,6 +1475,27 @@ def _max_sentinel_batch(store_path: str) -> int:
     return mx
 
 
+def _position_pivot(terms_at: dict[int, str]) -> list:
+    """Per-doc position arrays ``__p<i>`` = the sorted positions of
+    ``terms_at[i]`` (flattened across the header/body weight split),
+    one parsed aggregate expression per offset."""
+    return [
+        F.expr(
+            "sort_array(flatten(collect_list(CASE WHEN term = "
+            f"{sql_string(t)} THEN positions END))) AS __p{i}"
+        )
+        for i, t in terms_at.items()
+    ]
+
+
+def _chain_count_sql(offsets: list[int]) -> str:
+    """Occurrences of an offset chain: positions ``p`` of the anchor
+    ``__p<offsets[0]>`` (offset 0) with ``p + i`` in ``__p<i>`` for every
+    later offset ``i`` — the phrase / trigram adjacency test."""
+    conds = " AND ".join(f"array_contains(__p{i}, p + {i})" for i in offsets[1:])
+    return f"size(filter(__p{offsets[0]}, p -> {conds or 'true'}))"
+
+
 class PostingStore:
     """Persisted posting table with LSM-style incremental maintenance.
 
@@ -2100,7 +2122,7 @@ class PostingStore:
 
         def scope(df):
             if buckets is not None:
-                df = df.filter(F.col("term_bucket").isin([int(b) for b in buckets]))
+                df = df.filter(in_list("term_bucket", buckets))
             if tenant is not None:
                 df = df.filter(F.col(self.tenant_col) == tenant)
             return df
@@ -2167,7 +2189,7 @@ class PostingStore:
         terms = sorted(set(stemmed_terms))
         buckets = sorted({self.bucket_of(t) for t in terms})
         idx = self.read(spark, buckets=buckets, tenant=tenant).filter(
-            F.col("term").isin(terms)
+            in_list("term", terms)
         )
         return (
             idx.groupBy("doc_id")
@@ -2224,30 +2246,12 @@ class PostingStore:
         uniq = sorted(set(stemmed_terms))
         buckets = sorted({self.bucket_of(t) for t in uniq})
         idx = self.read(spark, buckets=buckets, tenant=tenant).filter(
-            F.col("term").isin(uniq)
+            in_list("term", uniq)
         )
-        per = idx.groupBy("doc_id").agg(
-            *[
-                F.sort_array(
-                    F.flatten(
-                        F.collect_list(
-                            F.when(F.col("term") == t, F.col("positions"))
-                        )
-                    )
-                ).alias(f"__p{i}")
-                for i, t in enumerate(stemmed_terms)
-            ]
-        )
-
-        def _adjacent(p):
-            cond = None
-            for i in range(1, len(stemmed_terms)):
-                ci = F.array_contains(F.col(f"__p{i}"), p + i)
-                cond = ci if cond is None else (cond & ci)
-            return cond
-
+        terms_at = dict(enumerate(stemmed_terms))
+        per = idx.groupBy("doc_id").agg(*_position_pivot(terms_at))
         scored = per.withColumn(
-            "phrase_count", F.size(F.filter(F.col("__p0"), _adjacent))
+            "phrase_count", F.expr(_chain_count_sql(list(terms_at)))
         ).filter(F.col("phrase_count") > 0)
         return (
             scored.select(
@@ -2321,7 +2325,7 @@ class PostingStore:
         uniq = sorted(set(grams.values()))
         buckets = sorted({self.bucket_of(g) for g in uniq})
         idx = self.read(spark, buckets=buckets, tenant=tenant).filter(
-            F.col("term").isin(uniq)
+            in_list("term", uniq)
         )
         if not self.positions:
             if docs is None:
@@ -2346,7 +2350,7 @@ class PostingStore:
                 F.regexp_replace(F.lower(F.col(text_col)), r"^\s+", "").alias("__t"),
             )
             if len(cand_ids) <= REGEX_CANDIDATE_CAP:
-                verify = verify.filter(F.col("doc_id").isin(cand_ids))
+                verify = verify.filter(in_list("doc_id", cand_ids))
             # overlap-counting recheck (ALL start offsets, the same
             # contract as the in-index chain): bounded by the candidate
             # set, the pg_trgm heap-recheck shape.  Sequence needs an
@@ -2383,29 +2387,10 @@ class PostingStore:
         if ordered:
             idx = idx.repartitionByRange("doc_id")
         per = idx.groupBy("doc_id").agg(
-            F.first("lang").alias("lang"),
-            *[
-                F.sort_array(
-                    F.flatten(
-                        F.collect_list(
-                            F.when(F.col("term") == grams[i], F.col("positions"))
-                        )
-                    )
-                ).alias(f"__p{i}")
-                for i in offs
-            ],
+            F.expr("first(lang) AS lang"), *_position_pivot(grams)
         )
-
-        def _chained(p):
-            cond = None
-            for i in offs[1:]:
-                ci = F.array_contains(F.col(f"__p{i}"), p + i)
-                cond = ci if cond is None else (cond & ci)
-            return cond if cond is not None else F.lit(True)
-
         scored = per.withColumn(
-            "n_matches",
-            F.size(F.filter(F.col(f"__p{offs[0]}"), _chained)).cast("long"),
+            "n_matches", F.expr(f"CAST({_chain_count_sql(offs)} AS BIGINT)")
         ).filter(F.col("n_matches") > 0)
         out = scored.select("doc_id", "lang", "n_matches")
         return out.orderBy("doc_id") if ordered else out
@@ -2479,17 +2464,19 @@ class PostingStore:
             cand = None
             for lit in lits:
                 # docs rides through for the positions-less layout's
-                # bounded recheck; positional stores ignore it
+                # bounded recheck; positional stores ignore it.
+                # ordered=False: the legs feed a join and a collect, so
+                # a declared sort (and its range sampler) would be dead
                 ids = self.substring_search(
                     spark, lit, tenant=tenant, docs=docs,
-                    id_col=id_col, text_col=text_col,
+                    id_col=id_col, text_col=text_col, ordered=False,
                 ).select("doc_id")
                 cand = ids if cand is None else cand.join(ids, "doc_id")
             cand_ids = [
                 r[0] for r in cand.limit(REGEX_CANDIDATE_CAP + 1).collect()
             ]
             if len(cand_ids) <= REGEX_CANDIDATE_CAP:
-                scoped = base.filter(F.col("doc_id").isin(cand_ids))
+                scoped = base.filter(in_list("doc_id", cand_ids))
         out = (
             scoped.withColumn(
                 "n_matches",
@@ -2540,7 +2527,7 @@ class PostingStore:
         idx = self.read(
             spark, buckets=buckets, tenant=tenant, gen=g,
             as_of=meta.get("applied_through"),
-        ).filter(F.col("term").isin(terms))
+        ).filter(in_list("term", terms))
         # tenant-scoped ranking uses the tenant's OWN corpus stats (and
         # df comes from the tenant-pruned rows), so scores are identical
         # to a store built from that tenant's corpus alone — isolation
@@ -2576,29 +2563,25 @@ class PostingStore:
         # one partition — strictly worse at 100x scale than either
         # shipped shape.
         if df_via == "window":
-            per = per.withColumn(
-                "df", F.count(F.lit(1)).over(Window.partitionBy("term"))
-            )
+            per = per.withColumn("df", F.expr("count(1) OVER (PARTITION BY term)"))
         elif df_via == "broadcast":
             dfc = per.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
             per = per.join(F.broadcast(dfc), "term")
         else:
             raise ValueError(f"df_via must be 'window' or 'broadcast', got {df_via!r}")
-        contrib = (
-            F.log(F.lit(1.0) + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            * (F.col("tfw") * (BM25_K1 + 1.0))
-            / (
-                F.col("tfw")
-                + BM25_K1
-                * (F.lit(1.0 - BM25_B) + BM25_B * F.col("dl") / F.lit(avgdl))
-            )
+        # double literals as exact ``repr`` text: the parsed tree equals
+        # the one the Column operators built (idf * tf-part / length-part)
+        idf = f"ln(1.0D + ({n_docs!r}D - df + 0.5D) / (df + 0.5D))"
+        norm = (
+            f"tfw + ({1.0 - BM25_B!r}D + dl * {BM25_B!r}D / {avgdl!r}D) * {BM25_K1!r}D"
         )
+        contrib = f"{idf} * (tfw * {BM25_K1 + 1.0!r}D) / ({norm})"
         scored = per.groupBy("doc_id").agg(
             # floor(x*100 + 0.5)/100: HALF-UP on both engines (DuckDB
             # ROUND is banker's); the 2 dp absorb cross-libm ln ulp and
             # ≤|terms|-element sum-order noise
-            (F.floor(F.sum(contrib) * 100 + F.lit(0.5)) / 100).alias("rank_score"),
-            F.countDistinct("term").alias("terms_matched"),
+            F.expr(f"floor(sum({contrib}) * 100 + 0.5D) / 100 AS rank_score"),
+            F.expr("count(DISTINCT term) AS terms_matched"),
         )
         return (
             scored.orderBy(F.desc("rank_score"), F.asc("doc_id"))
@@ -2787,6 +2770,23 @@ def _farthest_point_select(vecs: list[list[float]], k: int) -> list[list[float]]
     return [vecs[i] for i in chosen]
 
 
+def _rescore_sim(qvec: list[float], vec_col: str):
+    """``cosine_sim``: the exact 6-dp cosine of ``vec_col`` against the
+    query — dim-aware, same split as the similarity paths: the codegen
+    HOF cosine as one parsed expression at low dim, Arrow/BLAS above the
+    cutoff (interpreted HOF dominates at the reference's 1536 dims)."""
+    from car_etl_spark.operators.similarity import (
+        EXPR_PROJECTION_MAX_DIM,
+        _cosine_pairs_pandas,
+    )
+
+    if len(qvec) <= EXPR_PROJECTION_MAX_DIM:
+        sim = F.expr(f"round({V.cosine_sql(vec_col, V.vector_sql(qvec))}, 6)")
+    else:
+        sim = F.round(_cosine_pairs_pandas(F.col(vec_col), V.literal_vector(qvec)), 6)
+    return sim.alias("cosine_sim")
+
+
 class IvfStore:
     """Persisted IVF layout: assignments partitioned by centroid_id +
     driver-resident centroids in meta.json.
@@ -2898,17 +2898,14 @@ class IvfStore:
             self.path, new_gen, self._LEGACY_DIRS, lease=_active_lease(self)
         )
 
-    def _stored_schema(self, gen: int | None = None):
-        """Build-time assignments schema — reads supply it explicitly so
-        partition-column type inference can never reinterpret tenant or
-        centroid values."""
+    @staticmethod
+    def _stored_schema(meta: dict):
+        """Build-time assignments schema from a meta snapshot the caller
+        holds — reads supply it explicitly so partition-column type
+        inference can never reinterpret tenant or centroid values."""
         from pyspark.sql.types import StructType
 
-        try:
-            m = self.meta(gen)
-        except (OSError, ValueError):
-            return None
-        return StructType.fromJson(m["schema"]) if "schema" in m else None
+        return StructType.fromJson(meta["schema"]) if "schema" in meta else None
 
     @_with_maintenance_lease
     def build(
@@ -3121,7 +3118,7 @@ class IvfStore:
 
         dim0 = len(cents[0][1]) if cents else 0
         if dim0 <= EXPR_PROJECTION_MAX_DIM:
-            sim = V.cosine_similarity(F.col(vec_col), F.col("centroid_vec"))
+            sim = V.cosine_similarity(vec_col, "centroid_vec")
         else:
             sim = _cosine_pairs_pandas(F.col(vec_col), F.col("centroid_vec"))
         stats = (
@@ -3238,7 +3235,7 @@ class IvfStore:
 
         dim0 = len(cents[0][1]) if cents else 0
         if dim0 <= EXPR_PROJECTION_MAX_DIM:
-            sim = V.cosine_similarity(F.col(vec_col), F.col("centroid_vec"))
+            sim = V.cosine_similarity(vec_col, "centroid_vec")
         else:
             sim = _cosine_pairs_pandas(F.col(vec_col), F.col("centroid_vec"))
         stats = (
@@ -3305,6 +3302,23 @@ class IvfStore:
             recheck=lambda: _fence_check(self),
         )
         cents = sorted(zip(m["centroid_ids"], m["centroids"]))
+        stored = self._stored_schema(m)
+        if upserts is not None and stored is not None:
+            # delta files are read back with the STORED build-time
+            # schema, so an upsert column of another type (array<double>
+            # embeddings into an array<float> store) must be cast here —
+            # written as-is it fails every later read with
+            # PARQUET_COLUMN_DATA_TYPE_MISMATCH
+            casts = {
+                c: stored[c].dataType
+                for c in upserts.columns
+                if c in stored.fieldNames()
+                and upserts.schema[c].dataType != stored[c].dataType
+            }
+            if casts:
+                upserts = upserts.withColumns(
+                    {c: F.col(c).cast(t) for c, t in casts.items()}
+                )
         if self.tenant_col and self.tenant_col not in keep:
             keep = tuple(keep) + (self.tenant_col,)
         filter_cols = list(m.get("filters") or {})
@@ -3426,7 +3440,7 @@ class IvfStore:
             # extra read job); tenant stores key by (tenant, id)
             from pyspark.sql.types import StructField, StructType
 
-            src = self._stored_schema()
+            src = stored
             if src is None:
                 src = (
                     upserts.schema
@@ -3508,6 +3522,7 @@ class IvfStore:
         tenant=None,
         as_of: int | None = None,
         gen: int | None = None,
+        meta: dict | None = None,
     ) -> DataFrame:
         """The live assignment view: base + deduped delta, minus rows
         older than their id's newest tombstone (liveness rule shared
@@ -3517,20 +3532,28 @@ class IvfStore:
         (tenant, probed-centroid) directories.  ``as_of`` overrides the
         committed-snapshot bound (see :func:`_live_window`); ``gen``
         pins the generation a serving walk already read its meta from
-        (default: pin the current one at entry)."""
+        (default: pin the current one at entry), and ``meta`` passes that
+        walk's snapshot of generation ``gen`` so the schema, epoch and
+        upper bound come from the same state as its certificate (default:
+        one read of ``gen``'s meta)."""
         if tenant is not None and not self.tenant_col:
             raise ValueError("store was not built with a tenant_col")
         g = self._gen() if gen is None else gen
 
         def scope(df):
             if probes is not None:
-                df = df.filter(F.col("centroid_id").isin([int(p) for p in probes]))
+                df = df.filter(in_list("centroid_id", probes))
             if tenant is not None:
                 df = df.filter(F.col(self.tenant_col) == tenant)
             return df
 
         key = [self.tenant_col, id_col] if self.tenant_col else [id_col]
-        stored = self._stored_schema(gen=g)
+        if meta is None:
+            try:
+                meta = self.meta(g)
+            except (OSError, ValueError):
+                meta = {}
+        stored = self._stored_schema(meta)
         reader = spark.read.schema(stored) if stored is not None else spark.read
         df = scope(reader.parquet(self._assign_dir_at(g)))
         # snapshot window (see PostingStore.read's identical guard, SAME
@@ -3538,14 +3561,8 @@ class IvfStore:
         # crashed compact already folded into base; the committed upper
         # bound hides batches whose final meta write has not landed
         # (_live_window)
-        epoch, upper = 0, as_of
-        try:
-            m = self.meta(g)
-            epoch = int(m.get("compacted_through") or 0)
-            if upper is None:
-                upper = m.get("applied_through")
-        except (OSError, ValueError):
-            pass
+        epoch = int(meta.get("compacted_through") or 0)
+        upper = meta.get("applied_through") if as_of is None else as_of
         if self._has_parquet(self._delta_dir_at(g)):
             delta = _live_window(
                 scope(reader.parquet(self._delta_dir_at(g))), epoch, upper
@@ -4012,27 +4029,15 @@ class IvfStore:
             else self.probe_ids(qvec, nprobe, meta=m)
         )
         as_of = m.get("applied_through")
-        qlit = V.literal_vector(qvec)
-        # dim-aware rescoring kernel, same split as the similarity paths:
-        # codegen HOF cosine at low dim, Arrow/BLAS above the cutoff
-        # (interpreted HOF dominates at the reference's 1536 dims)
-        from car_etl_spark.operators.similarity import (
-            EXPR_PROJECTION_MAX_DIM,
-            _cosine_pairs_pandas,
-        )
-
-        if len(qvec) <= EXPR_PROJECTION_MAX_DIM:
-            sim = F.round(V.cosine_similarity(F.col(vec_col), qlit), 6)
-        else:
-            sim = F.round(_cosine_pairs_pandas(F.col(vec_col), qlit), 6)
         scan = self.read_assignments(
-            spark, probes=probes, id_col=id_col, tenant=tenant, as_of=as_of, gen=g
+            spark, probes=probes, id_col=id_col, tenant=tenant, as_of=as_of,
+            gen=g, meta=m,
         ).coalesce(self._serving_task_count(probes, m))
         if where is not None:
             col, values = where
-            scan = scan.filter(F.col(col).isin(list(values)))
+            scan = scan.filter(in_list(col, values))
         return (
-            scan.select(id_col, *extra_cols, sim.alias("cosine_sim"))
+            scan.select(id_col, *extra_cols, _rescore_sim(qvec, vec_col))
             .orderBy(F.desc("cosine_sim"), F.asc(id_col))
             .limit(k)
         )
@@ -4113,16 +4118,16 @@ class IvfStore:
         def scoped(cols: list[str]) -> DataFrame:
             s = self.read_assignments(
                 spark, probes=probes, id_col=id_col, tenant=tenant, as_of=as_of,
-                gen=g,
+                gen=g, meta=m,
             ).coalesce(self._serving_task_count(probes, m))
             if where is not None:
-                s = s.filter(F.col(where[0]).isin(list(where[1])))
+                s = s.filter(in_list(where[0], where[1]))
             return s.select(*cols)
 
         scored = (
             scoped([id_col, "pq_code", "pq_err"])
             .filter(F.col("pq_code").isNotNull())
-            .withColumn("__adc", PQ.adc_score_col(F.col("pq_code"), table))
+            .withColumn("__adc", PQ.adc_score("pq_code", table))
         )
         # FUSED serving shape (the default): ONE TakeOrdered pass over
         # the code-only scan collects the top-R rows by raw ADC with
@@ -4222,25 +4227,15 @@ class IvfStore:
                     survivors = scored.filter(
                         F.col("__ub") >= thresh - PQ.RERANK_SLACK
                     ).select(id_col)
-        from car_etl_spark.operators.similarity import (
-            EXPR_PROJECTION_MAX_DIM,
-            _cosine_pairs_pandas,
-        )
-
-        qlit = V.literal_vector(qvec)
-        if len(qvec) <= EXPR_PROJECTION_MAX_DIM:
-            sim = F.round(V.cosine_similarity(F.col(vec_col), qlit), 6)
-        else:
-            sim = F.round(_cosine_pairs_pandas(F.col(vec_col), qlit), 6)
         base = scoped([id_col, vec_col, *extra_cols])
         if fused_ids is not None:
-            base = base.filter(F.col(id_col).isin(fused_ids))
+            base = base.filter(in_list(id_col, fused_ids))
         elif survivors is not None:
             base = base.join(survivors, id_col)
         # else: rescore-all of the probed partitions (survivor fraction
         # past PQ_PUSH_MAX_FRACTION — the plain probed scan is the plan)
         return (
-            base.select(id_col, *extra_cols, sim.alias("cosine_sim"))
+            base.select(id_col, *extra_cols, _rescore_sim(qvec, vec_col))
             .orderBy(F.desc("cosine_sim"), F.asc(id_col))
             .limit(k)
         )

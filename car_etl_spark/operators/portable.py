@@ -590,7 +590,7 @@ def portable_embedding_pairs(
     cand_ids = candidate_id_frame(cand, id_col, cand.count())
     needed = (
         src.join(cand_ids, id_col, "left_semi")
-        .select(id_col, vec_col, V.norm(F.col(vec_col)).alias("__n"))
+        .select(id_col, vec_col, V.norm(vec_col).alias("__n"))
         .localCheckpoint(eager=True)
     )
     va = needed.select(
@@ -605,7 +605,7 @@ def portable_embedding_pairs(
     )
     denom = F.col("__na") * F.col("__nb")
     sim = F.round(
-        F.when(denom > 0, V.dot(F.col("va"), F.col("vb")) / denom), 6
+        F.when(denom > 0, V.dot("va", "vb") / denom), 6
     )
     return (
         cand.join(va, "id_a")

@@ -43,6 +43,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from car_etl_spark.functions import vectors as V
+
 #: certified-rescore slack: 1e-6 absorbs the 6-dp output rounding at
 #: the k-th boundary (same constant as IvfStore.probe_ids_exact), the
 #: second 1e-6 covers float accumulation in the ADC sums
@@ -195,21 +197,22 @@ def adc_table(qvec: list[float], codebooks: np.ndarray) -> np.ndarray:
     return np.einsum("mkd,md->mk", books, q.reshape(m, dsub))
 
 
-def adc_score_col(code_col: Column, table: np.ndarray) -> Column:
-    """ADC score of a code column against a query table — vectorized
-    gather-and-sum over Arrow batches (the Arrow transfer moves m
-    smallints per row; the embedding column never travels)."""
-    tab = np.ascontiguousarray(table, dtype="float64")
-    m = tab.shape[0]
-    rows = np.arange(m)
-
-    @pandas_udf("double")
-    def adc(codes: pd.Series) -> pd.Series:
-        if codes.empty:
-            return pd.Series(np.empty(0, dtype="float64"))
-        # packed m-byte codes -> (n, m) uint8 in one frombuffer, no
-        # per-row Python beyond the join
-        arr = np.frombuffer(b"".join(codes), dtype="uint8").reshape(-1, m)
-        return pd.Series(tab[rows[None, :], arr].sum(axis=1))
-
-    return adc(code_col)
+def adc_score(code_col: str, table: np.ndarray) -> Column:
+    """ADC score of a packed code column against a query table, as one
+    Catalyst expression: ``sum_j table[j][code_j]``, summed left to
+    right from ``0D``.  The (m, k) table travels as ONE split-cast
+    string literal (constant-folded once; an ``array(CAST ...)`` of m*k
+    elements costs far more JVM analysis) and byte ``j`` of the code is
+    read as ``conv(substring(hex(code), 2j+1, 2), 16, 10)`` — no Python
+    worker, and the embedding column never travels.  Summation order
+    differs from a numpy row sum only in the last bits, inside the
+    ``RERANK_SLACK`` allowance for ADC float accumulation.  Non-finite
+    table entries raise (see ``vectors.vector_sql``)."""
+    tab = np.asarray(table, dtype="float64")
+    m, k = tab.shape
+    flat = V.vector_sql(tab.ravel())
+    byte_j = f"CAST(conv(substring(hex({code_col}), 2 * j + 1, 2), 16, 10) AS INT)"
+    return F.expr(
+        f"aggregate(sequence(0, {m - 1}), 0D, "
+        f"(acc, j) -> acc + {flat}[j * {k} + {byte_j}])"
+    )

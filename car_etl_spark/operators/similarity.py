@@ -623,7 +623,7 @@ def ivf_assign(
     if dim <= EXPR_PROJECTION_MAX_DIM:
         structs = [
             F.struct(
-                V.cosine_similarity(F.col(vec_col), V.literal_vector(vec)).alias("s"),
+                V.cosine_similarity(vec_col, V.vector_sql(vec)).alias("s"),
                 F.lit(-cid).alias("nid"),  # max(-id) == min(id) on sim ties
             )
             for cid, vec in cents
@@ -751,7 +751,7 @@ def ivf_topk(
         centroids.crossJoin(F.broadcast(qdf))
         .select(
             "centroid_id",
-            V.cosine_similarity(F.col("centroid_vec"), F.col("qvec")).alias("s"),
+            V.cosine_similarity("centroid_vec", "qvec").alias("s"),
         )
         .orderBy(F.desc("s"), F.asc("centroid_id"))
         .limit(nprobe)
@@ -769,7 +769,7 @@ def ivf_topk(
         (len(r.centroid_vec) for r in centroid_rows if r.centroid_vec is not None), 0
     )
     if dim <= EXPR_PROJECTION_MAX_DIM:
-        sim = V.cosine_similarity(F.col(vec_col), F.col("qvec"))
+        sim = V.cosine_similarity(vec_col, "qvec")
     else:
         sim = _cosine_pairs_pandas(F.col(vec_col), F.col("qvec"))
     return (
@@ -914,7 +914,7 @@ def embedding_lsh_bands(
         bits = []
         for j in range(bits_per_band):
             plane = planes[bi * bits_per_band + j]
-            proj = V.dot(F.col(vec_col), F.array(*[F.lit(x) for x in plane]))
+            proj = V.dot(vec_col, V.vector_sql(plane))
             bits.append(
                 F.when(proj >= 0, F.shiftleft(F.lit(1).cast("long"), j)).otherwise(
                     F.lit(0).cast("long")
@@ -1017,7 +1017,7 @@ def embedding_near_duplicates(
     cand_ids = candidate_id_frame(cand, id_col, cand.count())
     needed = (
         emb.join(cand_ids, id_col, "left_semi")
-        .select(id_col, vec_col, V.norm(F.col(vec_col)).alias("__n"))
+        .select(id_col, vec_col, V.norm(vec_col).alias("__n"))
         .localCheckpoint(eager=True)
     )
     va = needed.select(
@@ -1036,7 +1036,7 @@ def embedding_near_duplicates(
     else:
         denom = F.col("__na") * F.col("__nb")
         sim = F.when(
-            denom > 0, V.dot(F.col("va"), F.col("vb")) / denom
+            denom > 0, V.dot("va", "vb") / denom
         )
     return (
         pairs.select("id_a", "id_b", F.round(sim, 6).alias("cosine_sim"))

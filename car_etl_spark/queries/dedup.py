@@ -339,7 +339,7 @@ def embedding_neardup_exact_block(
     # (n, not n^2) the pair condition runs ONE HOF (the dot).  The
     # arithmetic shape is unchanged — sqrt(self-dot) per side, then
     # dot/(na*nb) — so values stay bit-identical to the DuckDB twin.
-    emb = emb.withColumn("__nrm", V.norm(F.col("embedding")))
+    emb = emb.withColumn("__nrm", V.norm("embedding"))
     B = embedding_subblock_count(sf_dir)
     par = spark.sparkContext.defaultParallelism * 2
     a = emb.repartition(par, "vec_id").alias("a")
@@ -356,7 +356,7 @@ def embedding_neardup_exact_block(
     sim = F.round(
         F.when(
             denom > 0,
-            V.dot(F.col("a.embedding"), F.col("b.embedding")) / denom,
+            V.dot("a.embedding", "b.embedding") / denom,
         ),
         6,
     )

@@ -68,10 +68,10 @@ def _hybrid_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    from car_etl_spark.queries.vector import _query_vec_literal
+    from car_etl_spark.queries.vector import _query_vec_sql
 
-    qlit = _query_vec_literal(emb, cache_key=sf_dir)
-    sim = F.round(V.cosine_similarity(F.col("embedding"), qlit), 6)
+    qlit = _query_vec_sql(emb, cache_key=sf_dir)
+    sim = F.round(V.cosine_similarity("embedding", qlit), 6)
     vec_leg = (
         emb.select(F.col("vec_id").alias("doc_id"), sim.alias("vec_score"))
         .orderBy(F.desc("vec_score"), F.asc("doc_id"))

@@ -47,8 +47,9 @@ def clear_query_vec_cache() -> None:
     _QVEC_CACHE.clear()
 
 
-def _query_vec_literal(emb: DataFrame, cache_key: str | None = None):
-    """Fetch the query vector (one-row job) and inline it as a literal —
+def _query_vec_sql(emb: DataFrame, cache_key: str | None = None) -> str:
+    """Fetch the query vector (one-row job) and inline it as a literal
+    (SQL text, :func:`~car_etl_spark.functions.vectors.vector_sql`) —
     the serving shape: the query embedding is a request parameter, not a
     join input.  Cuts the broadcast-exchange sub-job from every
     single-query search (measured ~0.2 s of the per-call latency at
@@ -63,12 +64,12 @@ def _query_vec_literal(emb: DataFrame, cache_key: str | None = None):
     served the unfiltered table's vector.  Callers with a derived frame
     must pass ``cache_key=None`` (every current caller passes the raw
     table)."""
-    return V.literal_vector(_query_vec_list(emb, cache_key))
+    return V.vector_sql(_query_vec_list(emb, cache_key))
 
 
 def _query_vec_list(emb: DataFrame, cache_key: str | None = None) -> list:
     """The query vector as a Python list (same cache + contract as
-    :func:`_query_vec_literal`) — for callers that need the raw values
+    :func:`_query_vec_sql`) — for callers that need the raw values
     driver-side (IVF centroid probing)."""
     key = _qvec_cache_key(cache_key) if cache_key is not None else None
     if key is not None and key in _QVEC_CACHE:
@@ -94,8 +95,8 @@ def vector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-        qlit = _query_vec_literal(emb, cache_key=sf_dir)
-        sim = F.round(V.cosine_similarity(F.col("embedding"), qlit), 6)
+        qlit = _query_vec_sql(emb, cache_key=sf_dir)
+        sim = F.round(V.cosine_similarity("embedding", qlit), 6)
         return (
             emb.select("vec_id", "label", sim.alias("cosine_sim"))
             .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
@@ -119,8 +120,8 @@ def vector_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-NN label vote: top-50 neighbors -> votes per label (the
     classification read-path over ANN results)."""
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    qlit = _query_vec_literal(emb, cache_key=sf_dir)
-    sim = F.round(V.cosine_similarity(F.col("embedding"), qlit), 6)
+    qlit = _query_vec_sql(emb, cache_key=sf_dir)
+    sim = F.round(V.cosine_similarity("embedding", qlit), 6)
     top = (
         emb.filter(F.col("vec_id") != 0)
         .select("vec_id", "label", sim.alias("s"))
@@ -154,7 +155,7 @@ def vector_label_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (one pass, map-side partial agg)."""
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     q = _query_vec(emb)
-    sim = V.cosine_similarity(F.col("embedding"), F.col("qvec"))
+    sim = V.cosine_similarity("embedding", "qvec")
     return (
         emb.crossJoin(F.broadcast(q))
         .select("label", sim.alias("s"))
@@ -184,7 +185,7 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Norm statistics per label — embedding-hygiene check (catches
     unnormalized or degenerate vectors before they poison ANN)."""
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    nrm = V.norm(F.col("embedding"))
+    nrm = V.norm("embedding")
     return (
         emb.select("label", nrm.alias("nrm"))
         .groupBy("label")
@@ -212,9 +213,9 @@ def vector_label_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry slot for round 1's label-similarity and norms queries;
     map-side partial agg, single shuffle on label)."""
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    qlit = _query_vec_literal(emb, cache_key=sf_dir)
-    sim = V.cosine_similarity(F.col("embedding"), qlit)
-    nrm = V.norm(F.col("embedding"))
+    qlit = _query_vec_sql(emb, cache_key=sf_dir)
+    sim = V.cosine_similarity("embedding", qlit)
+    nrm = V.norm("embedding")
     return (
         emb.select("label", sim.alias("s"), nrm.alias("nrm"))
         .groupBy("label")
@@ -261,7 +262,7 @@ def _vector_topk_batch_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    sim = F.round(V.cosine_similarity(F.col("embedding"), F.col("qvec")), 6)
+    sim = F.round(V.cosine_similarity("embedding", "qvec"), 6)
     scored = (
         emb.crossJoin(F.broadcast(queries))
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -370,7 +371,7 @@ def _vector_ivf_topk_batch_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, probes=sorted(probe_union),
         as_of=meta.get("applied_through"), gen=gen,
     )
-    sim = F.round(V.cosine_similarity(F.col("embedding"), F.col("qvec")), 6)
+    sim = F.round(V.cosine_similarity("embedding", "qvec"), 6)
     scored = (
         assigned.crossJoin(F.broadcast(queries))
         .filter(F.col("vec_id") != F.col("query_id"))

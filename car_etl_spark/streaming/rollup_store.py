@@ -63,6 +63,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from car_etl_spark.functions.literals import in_list
 from car_etl_spark.operators.indexing import _with_maintenance_lease
 
 #: exact partial-sum type shared with queries/parity.py's DEC
@@ -545,7 +546,7 @@ class RollupStore:
         parts = self.partials(spark)
         stranded = self._stranded_batches()
         if stranded:
-            parts = parts.filter(~F.col("batch").isin(stranded))
+            parts = parts.filter(~in_list("batch", stranded))
         live = self._merge_to(
             parts,
             F.col("minute_start"),
@@ -592,7 +593,7 @@ class RollupStore:
         fresh = (
             self._minute_partials(
                 source_events.filter(
-                    F.to_date(F.date_trunc("minute", F.col(self.ts_col))).isin(dates)
+                    in_list(f"to_date(date_trunc('minute', `{self.ts_col}`))", dates)
                 )
             )
             .withColumn("batch", F.lit(0).cast("long"))

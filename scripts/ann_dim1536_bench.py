@@ -74,9 +74,9 @@ def main() -> None:
     t_ivf = time.perf_counter() - t0
 
     t0 = time.perf_counter()
-    qlit = V.literal_vector(qvec)
+    qlit = V.vector_sql(qvec)
     exact = (
-        emb.select("vec_id", V.cosine_similarity(F.col("embedding"), qlit).alias("s"))
+        emb.select("vec_id", V.cosine_similarity("embedding", qlit).alias("s"))
         .orderBy(F.desc("s"), F.asc("vec_id"))
         .limit(10)
     )

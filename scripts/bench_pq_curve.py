@@ -66,7 +66,7 @@ def survivor_fraction(spark, store, qvec, k=20) -> float:
         F.col("pq_code").isNotNull()
     )
     scored = (
-        scan.withColumn("adc", PQ.adc_score_col(F.col("pq_code"), table))
+        scan.withColumn("adc", PQ.adc_score("pq_code", table))
         .withColumn("lb", F.col("adc") - F.col("pq_err"))
         .withColumn("ub", F.col("adc") + F.col("pq_err"))
     )

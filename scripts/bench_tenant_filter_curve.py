@@ -106,7 +106,7 @@ def main() -> None:
             .select(
                 "vec_id", "tenant_id",
                 F.round(
-                    V.cosine_similarity(F.col("embedding"), V.literal_vector(qvec)), 6
+                    V.cosine_similarity("embedding", V.vector_sql(qvec)), 6
                 ).alias("cosine_sim"),
             )
             .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))

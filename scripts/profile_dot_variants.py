@@ -65,7 +65,7 @@ def pairs(n):
 # ---- exact parity gate on 10k pairs ---------------------------------
 small = pairs(10_000).localCheckpoint(eager=True)
 got = small.select(
-    V.dot(F.col("a"), F.col("b")).alias("h"),
+    V.dot("a", "b").alias("h"),
     unrolled_dot(F.col("a"), F.col("b"), DIM).alias("u"),
 ).collect()
 bad = [r for r in got if r["h"] != r["u"]]
@@ -74,7 +74,7 @@ print("10k-pair exact parity: OK")
 
 base = pairs(N).localCheckpoint(eager=True)
 VARIANTS = {
-    "hof": lambda: base.select(V.dot(F.col("a"), F.col("b")).alias("d")),
+    "hof": lambda: base.select(V.dot("a", "b").alias("d")),
     "unrolled": lambda: base.select(
         unrolled_dot(F.col("a"), F.col("b"), DIM).alias("d")
     ),

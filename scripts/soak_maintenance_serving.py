@@ -189,7 +189,7 @@ def oracle_vectors(spark, vecs: dict, qvec: list[float]) -> list[tuple]:
         df.select(
             "vec_id", "label",
             F.round(
-                V.cosine_similarity(F.col("embedding"), V.literal_vector(qvec)), 6
+                V.cosine_similarity("embedding", V.vector_sql(qvec)), 6
             ).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))

@@ -216,7 +216,7 @@ def test_exact_probe_prunes_clustered_corpus(spark, tmp_path):
             "vec_id",
             "label",
             F.round(
-                V.cosine_similarity(F.col("embedding"), V.literal_vector(list(qvec))), 6
+                V.cosine_similarity("embedding", V.vector_sql(list(qvec))), 6
             ).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
@@ -390,7 +390,7 @@ def test_ivf_derived_k_exact_at_two_sizes(spark, tmp_path, n_per, clusters):
         for r in emb.select(
             "vec_id", "label",
             F.round(
-                V.cosine_similarity(F.col("embedding"), V.literal_vector(qvec)), 6
+                V.cosine_similarity("embedding", V.vector_sql(qvec)), 6
             ).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
@@ -676,7 +676,7 @@ def _brute_filtered(emb, qvec, labels, k=10):
         .select(
             "vec_id", "label",
             F.round(
-                V.cosine_similarity(F.col("embedding"), V.literal_vector(qvec)), 6
+                V.cosine_similarity("embedding", V.vector_sql(qvec)), 6
             ).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
@@ -822,7 +822,7 @@ def _brute_all(emb, qvec, k=10):
         for r in emb.select(
             "vec_id", "label",
             F.round(
-                V.cosine_similarity(F.col("embedding"), V.literal_vector(qvec)), 6
+                V.cosine_similarity("embedding", V.vector_sql(qvec)), 6
             ).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
@@ -845,7 +845,7 @@ def _pq_survivor_fraction(spark, store, qvec, k=10):
         F.col("pq_code").isNotNull()
     )
     scored = (
-        scan.withColumn("adc", PQ.adc_score_col(F.col("pq_code"), table))
+        scan.withColumn("adc", PQ.adc_score("pq_code", table))
         .withColumn("lb", F.col("adc") - F.col("pq_err"))
         .withColumn("ub", F.col("adc") + F.col("pq_err"))
     )

@@ -91,18 +91,18 @@ def test_ivf_topk_recall_vs_bruteforce(spark):
 
     emb = load_tables(spark, SF_SMALL, ("embeddings",))["embeddings"]
     [qrow] = emb.filter(F.col("vec_id") == 42).select("embedding").collect()
-    qvec = F.array(*[F.lit(float(x)) for x in qrow.embedding])
+    qvec = V.vector_sql(qrow.embedding)
 
     exact = [
         r.vec_id
         for r in emb.select(
-            "vec_id", V.cosine_similarity(F.col("embedding"), qvec).alias("s")
+            "vec_id", V.cosine_similarity("embedding", qvec).alias("s")
         )
         .orderBy(F.desc("s"), F.asc("vec_id"))
         .limit(10)
         .collect()
     ]
-    ivf = [r.vec_id for r in S.ivf_topk(emb, qvec, k=10, num_centroids=16, nprobe=4).collect()]
+    ivf = [r.vec_id for r in S.ivf_topk(emb, F.expr(qvec), k=10, num_centroids=16, nprobe=4).collect()]
     # partial probe: the query vector itself must be found and recall
     # should be meaningful on near-random data
     assert exact[0] == 42
@@ -110,7 +110,7 @@ def test_ivf_topk_recall_vs_bruteforce(spark):
     assert len(set(exact) & set(ivf)) >= 3
 
     full_probe = [
-        r.vec_id for r in S.ivf_topk(emb, qvec, k=10, num_centroids=16, nprobe=16).collect()
+        r.vec_id for r in S.ivf_topk(emb, F.expr(qvec), k=10, num_centroids=16, nprobe=16).collect()
     ]
     assert full_probe == exact  # nprobe = num_centroids -> exact search
 
@@ -227,7 +227,7 @@ def test_highdim_cosine_null_semantics_match_expression_twin(spark):
     expr_out = {
         r.i: r.c
         for r in df.select(
-            "i", V.cosine_similarity(F.col("va"), F.col("vb")).alias("c")
+            "i", V.cosine_similarity("va", "vb").alias("c")
         ).collect()
     }
     assert pandas_out[2] is None and expr_out[2] is None

@@ -115,7 +115,7 @@ def test_ivf_tenant_scoped_exact(spark, tmp_path):
         .select(
             "vec_id", "label", "tenant_id",
             F.round(
-                V.cosine_similarity(F.col("embedding"), V.literal_vector(qvec)), 6
+                V.cosine_similarity("embedding", V.vector_sql(qvec)), 6
             ).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
@@ -159,7 +159,7 @@ def test_ivf_tenant_exact_under_maintenance(spark, tmp_path):
         for r in live.select(
             "vec_id", "tenant_id",
             F.round(
-                V.cosine_similarity(F.col("embedding"), V.literal_vector(qvec)), 6
+                V.cosine_similarity("embedding", V.vector_sql(qvec)), 6
             ).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
@@ -295,7 +295,7 @@ def test_ivf_tenant_certificate_randomized(spark, tmp_path, seed):
             for r in brute_df.select(
                 "vec_id", "tenant_id",
                 F.round(
-                    V.cosine_similarity(F.col("embedding"), V.literal_vector(q)), 6
+                    V.cosine_similarity("embedding", V.vector_sql(q)), 6
                 ).alias("cosine_sim"),
             )
             .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
@@ -415,7 +415,7 @@ def test_api_tenant_vector_search_route(spark, tmp_path):
         .select(
             "vec_id", "tenant_id",
             F.round(
-                V.cosine_similarity(F.col("embedding"), V.literal_vector(qvec)), 6
+                V.cosine_similarity("embedding", V.vector_sql(qvec)), 6
             ).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
@@ -625,7 +625,7 @@ def test_api_tenant_pq_search_route(spark, tmp_path):
         .select(
             "vec_id", "tenant_id",
             F.round(
-                V.cosine_similarity(F.col("embedding"), V.literal_vector(qvec)), 6
+                V.cosine_similarity("embedding", V.vector_sql(qvec)), 6
             ).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
@@ -678,7 +678,7 @@ def _brute_tenant_filtered(emb, qvec, tenant, labels, k=8):
         .select(
             "vec_id", "tenant_id",
             F.round(
-                V.cosine_similarity(F.col("embedding"), V.literal_vector(qvec)), 6
+                V.cosine_similarity("embedding", V.vector_sql(qvec)), 6
             ).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))

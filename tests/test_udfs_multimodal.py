@@ -35,7 +35,7 @@ def test_embed_then_cosine_topk_pipeline(spark):
     q = emb.filter(F.col("doc_id") == 0).select(F.col("embedding").alias("qvec"))
     top = (
         emb.crossJoin(F.broadcast(q))
-        .select("doc_id", V.cosine_similarity(F.col("embedding"), F.col("qvec")).alias("s"))
+        .select("doc_id", V.cosine_similarity("embedding", "qvec").alias("s"))
         .orderBy(F.desc("s"))
         .limit(1)
         .collect()
